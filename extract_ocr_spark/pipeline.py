@@ -47,87 +47,22 @@ from .schemas import EXTRACTED_SCHEMA
 # are ~100× median ≈ 800 KB).
 BIG_DOC_BYTES = 256 << 10
 
-_EXTRACT_FULL_SCHEMA = T.StructType(
-    [
-        *EXTRACTED_SCHEMA.fields,
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("spans_in", T.IntegerType(), False),
-        T.StructField("spans_out", T.IntegerType(), False),
-        T.StructField("bytes_in", T.LongType(), False),
-        T.StructField("bytes_out", T.LongType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
-
-def _spans_to_records(spans) -> list[dict]:
-    """Arrow hands array<struct> to pandas as a sequence of dicts."""
-    if spans is None:
-        return []
-    return list(spans)
-
-
-def _extract_batches(mode: str, waf_integration: bool = True):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        for pdf in batches:
-            doc_ids = pdf["doc_id"].tolist()
-            spans_col = [_spans_to_records(s) for s in pdf["spans"]]
-            outs = []
-            errors: list[str | None] = []
-            walls: list[int] = []
-            # Per-document containment: one malformed document becomes an
-            # 'error' lineage event, never a failed task/stage (the
-            # reference's error-event path, crawl.py:968-979).
-            for i, (d, s) in enumerate(zip(doc_ids, spans_col)):
-                t0 = time.perf_counter()
-                try:
-                    outs.append(extract_doc(
-                        d, s, mode=mode, waf_integration=waf_integration))
-                    errors.append(None)
-                except Exception as exc:  # noqa: BLE001
-                    outs.append([])
-                    errors.append(f"{type(exc).__name__}: {exc}"[:500])
-                    if d is None:
-                        # keep the output schema's non-null doc_id
-                        doc_ids[i] = f"<null-doc-id:{pid}:{i}>"
-                # true per-doc wall (a skewed doc no longer smears its
-                # cost across batch-mates in the metrics table)
-                walls.append(int((time.perf_counter() - t0) * 1000))
-            yield pd.DataFrame(
-                {
-                    "doc_id": doc_ids,
-                    "out_spans": outs,
-                    "partition_id": [pid] * len(doc_ids),
-                    "spans_in": [len(s) for s in spans_col],
-                    "spans_out": [len(o) for o in outs],
-                    "bytes_in": [doc_size_bytes(s) for s in spans_col],
-                    "bytes_out": [
-                        sum(len(sp["text"]) for sp in o if sp["text"]) for o in outs
-                    ],
-                    "wall_ms": walls,
-                    "error": errors,
-                }
-            )
-
-    return fn
-
-
-_EXTRACT_DIGEST_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("out_sha", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("spans_in", T.IntegerType(), False),
-        T.StructField("spans_out", T.IntegerType(), False),
-        T.StructField("bytes_in", T.LongType(), False),
-        T.StructField("bytes_out", T.LongType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
+# Per-doc counters every extraction row carries after its payload column.
+_STATS_FIELDS = [
+    T.StructField("partition_id", T.IntegerType(), False),
+    T.StructField("spans_in", T.IntegerType(), False),
+    T.StructField("spans_out", T.IntegerType(), False),
+    T.StructField("bytes_in", T.LongType(), False),
+    T.StructField("bytes_out", T.LongType(), False),
+    T.StructField("wall_ms", T.LongType(), False),
+    T.StructField("error", T.StringType(), True),
+]
+_EXTRACT_FULL_SCHEMA = T.StructType([*EXTRACTED_SCHEMA.fields, *_STATS_FIELDS])
+_EXTRACT_DIGEST_SCHEMA = T.StructType([
+    EXTRACTED_SCHEMA["doc_id"],
+    T.StructField("out_sha", T.StringType(), False),
+    *_STATS_FIELDS,
+])
 
 
 def _digest_spans(spans: list[dict]) -> str:
@@ -151,47 +86,53 @@ def _digest_spans(spans: list[dict]) -> str:
     return h.hexdigest()
 
 
-def _extract_digest_batches(mode: str):
-    """Same kernel work as _extract_batches, but the Arrow return payload
-    carries a 64-hex digest of the rendered spans instead of the spans
-    themselves. This is the benchmark reducer: when the consumer is an
-    aggregate (not a sink), shipping every rendered byte Python→JVM is
-    pure self-inflicted memory-bus traffic; the digest still forces full
-    rendering (every output byte feeds sha256) while shrinking the return
-    channel ~1000×. Production writes use _extract_batches — a sink needs
-    the bytes."""
+def _extract_batches(mode: str, waf_integration: bool = True,
+                     digest: bool = False):
+    """The per-doc extraction loop behind every ``mapInPandas`` boundary.
+
+    The payload column is ``out_spans`` (the rendered spans, what a sink
+    writes) or, with ``digest=True``, ``out_sha``: a 64-hex sha256 of the
+    rendered spans. The digest still forces full rendering (every output
+    byte feeds sha256) while shrinking the Python→JVM return channel
+    ~1000× — the aggregate-consumer path the benchmarks time."""
+    payload_col = "out_sha" if digest else "out_spans"
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         for pdf in batches:
             doc_ids = pdf["doc_id"].tolist()
-            spans_col = [_spans_to_records(s) for s in pdf["spans"]]
-            shas, errors = [], []
-            spans_out, bytes_out = [], []
+            # Arrow hands array<struct> to pandas as a sequence of dicts
+            spans_col = [[] if s is None else list(s) for s in pdf["spans"]]
+            payload, spans_out, bytes_out = [], [], []
+            errors: list[str | None] = []
             walls: list[int] = []
+            # Per-document containment: one malformed document becomes an
+            # 'error' lineage event, never a failed task/stage (the
+            # reference's error-event path, crawl.py:968-979).
             for i, (d, s) in enumerate(zip(doc_ids, spans_col)):
                 t0 = time.perf_counter()
                 try:
-                    out = extract_doc(d, s, mode=mode)
-                    shas.append(_digest_spans(out))
-                    spans_out.append(len(out))
-                    bytes_out.append(
-                        sum(len(sp["text"]) for sp in out if sp["text"]))
+                    out = extract_doc(
+                        d, s, mode=mode, waf_integration=waf_integration)
+                    payload.append(_digest_spans(out) if digest else out)
                     errors.append(None)
                 except Exception as exc:  # noqa: BLE001
-                    shas.append("")
-                    spans_out.append(0)
-                    bytes_out.append(0)
+                    out = []
+                    payload.append("" if digest else out)
                     errors.append(f"{type(exc).__name__}: {exc}"[:500])
                     if d is None:
+                        # keep the output schema's non-null doc_id
                         doc_ids[i] = f"<null-doc-id:{pid}:{i}>"
-                # true per-doc wall (no even smearing across batch-mates)
+                # true per-doc wall (a skewed doc no longer smears its
+                # cost across batch-mates in the metrics table)
                 walls.append(int((time.perf_counter() - t0) * 1000))
+                spans_out.append(len(out))
+                bytes_out.append(sum(len(sp["text"]) for sp in out if sp["text"]))
             yield pd.DataFrame(
                 {
                     "doc_id": doc_ids,
-                    "out_sha": shas,
+                    payload_col: payload,
                     "partition_id": [pid] * len(doc_ids),
                     "spans_in": [len(s) for s in spans_col],
                     "spans_out": spans_out,
@@ -205,23 +146,14 @@ def _extract_digest_batches(mode: str):
     return fn
 
 
-def extract_digest_df(docs: DataFrame, *, mode: str = "reference",
-                      partitions: int | None = None) -> DataFrame:
-    """Extraction with a digest-only return channel (see
-    _extract_digest_batches) — the aggregate-consumer path."""
-    spark = docs.sparkSession
-    parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    staged = salted_repartition(docs, parts)
-    return staged.mapInPandas(
-        _extract_digest_batches(mode), schema=_EXTRACT_DIGEST_SCHEMA)
-
-
-def salted_repartition(df: DataFrame, partitions: int,
-                       big_doc_bytes: int = BIG_DOC_BYTES,
-                       shuffle_small: bool | None = None) -> DataFrame:
+def salted_repartition(df: DataFrame, partitions: int) -> DataFrame:
     """Skew-aware staging for the extraction UDF.
 
-    Only the heavy tail is shuffled: docs above the size threshold are
+    ``partitions`` is the requested exchange width, capped at
+    ``2 × defaultParallelism`` (two task waves per core): a larger
+    request is silently clamped to that cap.
+
+    Only the heavy tail is shuffled: docs above ``BIG_DOC_BYTES`` are
     hash-repartitioned on doc_id into their own partition set, so one
     oversized PDF never serializes a partition of small docs behind it.
     Small docs keep their source partitioning (parquet splits are already
@@ -229,29 +161,25 @@ def salted_repartition(df: DataFrame, partitions: int,
     shuffling the full corpus to fix a 1% heavy tail would move ~99 TB for
     nothing.
 
-    ``shuffle_small=None`` (default) is scale-adaptive: when the source
-    has fewer partitions than the requested parallelism (a single small
-    file, a collapsed listing), keeping the source partitioning would
-    serialize the CPU-heavy extraction UDF behind a handful of tasks — so
-    everything is shuffled once. At real scale the scan has ≥ ``partitions``
-    splits and the heavy-tail-only path is kept. Pass ``True``/``False``
-    to force either behaviour (e.g. ``True`` for a known-skewed source).
+    The exception is scale-adaptive: when the source has fewer partitions
+    than the (capped) parallelism — a single small file, a collapsed
+    listing — keeping the source partitioning would serialize the
+    CPU-heavy extraction UDF behind a handful of tasks, so everything is
+    shuffled once. At real scale the scan has ≥ ``partitions`` splits and
+    the heavy-tail-only path is kept.
     """
-    # Cap the exchange width at two task waves per core: every task of a
-    # Python-eval stage pays a fixed dispatch cost (worker handshake +
-    # Arrow stream setup, measured ~8 ms wall each on this box), so task
-    # counts far beyond the cluster's parallelism buy nothing but
-    # overhead — 128 requested partitions vs the 64-task cap measured
-    # 5.29 s vs 4.19 s on the 120k-doc digest bench. The cap scales with
-    # ``defaultParallelism`` (grows with the cluster), so it is a
-    # proportional policy, not a local-mode constant; two waves keep
-    # enough granularity that one slow heavy-tail task cannot hold the
-    # whole stage.
+    # Why the cap: every task of a Python-eval stage pays a fixed dispatch
+    # cost (worker handshake + Arrow stream setup, measured ~8 ms wall
+    # each on this box), so task counts far beyond the cluster's
+    # parallelism buy nothing but overhead — 128 requested partitions vs
+    # the 64-task cap measured 5.29 s vs 4.19 s on the 120k-doc digest
+    # bench. The cap scales with ``defaultParallelism`` (grows with the
+    # cluster), so it is a proportional policy, not a local-mode
+    # constant; two waves keep enough granularity that one slow
+    # heavy-tail task cannot hold the whole stage.
     partitions = min(partitions,
                      2 * df.sparkSession.sparkContext.defaultParallelism)
-    if shuffle_small is None:
-        shuffle_small = df.rdd.getNumPartitions() < partitions
-    if shuffle_small:
+    if df.rdd.getNumPartitions() < partitions:
         # Every row moves anyway: one hash exchange assigns each doc_id to
         # the same target partition the two-branch union would (same hash
         # function, same partition count), with a single scan and no size
@@ -265,10 +193,28 @@ def salted_repartition(df: DataFrame, partitions: int,
             lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0)),
         ),
     )
-    small = sized.filter(F.col("_size") <= big_doc_bytes)
-    big = sized.filter(F.col("_size") > big_doc_bytes)
+    small = sized.filter(F.col("_size") <= BIG_DOC_BYTES)
+    big = sized.filter(F.col("_size") > BIG_DOC_BYTES)
     out = small.unionByName(big.repartition(partitions, "doc_id"))
     return out.drop("_size")
+
+
+def _staged_extract(docs: DataFrame, mode: str, partitions: int | None,
+                    waf_integration: bool, digest: bool) -> DataFrame:
+    parts = partitions or int(
+        docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    return salted_repartition(docs, parts).mapInPandas(
+        _extract_batches(mode, waf_integration, digest),
+        schema=_EXTRACT_DIGEST_SCHEMA if digest else _EXTRACT_FULL_SCHEMA)
+
+
+def extract_digest_df(docs: DataFrame, *, mode: str = "reference",
+                      partitions: int | None = None) -> DataFrame:
+    """Extraction with a digest-only return channel (``out_sha`` in place
+    of ``out_spans``, see ``_extract_batches``) — the aggregate-consumer
+    path. Production writes use ``extract_df``: a sink needs the bytes."""
+    return _staged_extract(docs, mode, partitions, waf_integration=True,
+                           digest=True)
 
 
 def extract_df(docs: DataFrame, *, mode: str = "reference",
@@ -280,11 +226,8 @@ def extract_df(docs: DataFrame, *, mode: str = "reference",
     ``waf_integration=False`` mirrors the reference's local-seed ingest
     (EP2): only hard WAF block markers drop a page, never the anchor-count
     heuristic (which misfires on browser-saved SPA shells)."""
-    spark = docs.sparkSession
-    parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    staged = salted_repartition(docs, parts)
-    out = staged.mapInPandas(
-        _extract_batches(mode, waf_integration), schema=_EXTRACT_FULL_SCHEMA)
+    out = _staged_extract(docs, mode, partitions,
+                          waf_integration=waf_integration, digest=False)
     if with_stats:
         return out
     return out.select("doc_id", "out_spans")

@@ -44,9 +44,10 @@ def stream_extract(spark: SparkSession, input_dir: str, output_dir: str,
         .option("maxFilesPerTrigger", "8")
         .parquet(input_dir)
     )
-    # No repartition in the stream: the size-class salting is a batch
-    # optimization; the streaming micro-batch is already bounded by
-    # maxFilesPerTrigger. The kernel is identical.
+    # The same per-doc loop as the batch path (pipeline._extract_batches);
+    # only the staging step is skipped: size-class salting is a batch
+    # optimization, and the micro-batch is already bounded by
+    # maxFilesPerTrigger.
     extracted = docs.mapInPandas(_extract_batches(mode), schema=_EXTRACT_FULL_SCHEMA)
     writer = (
         extracted.select("doc_id", "out_spans")

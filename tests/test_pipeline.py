@@ -210,14 +210,28 @@ def test_density_mode_through_pipeline(spark):
 def test_digest_path_agrees_with_spans_path(spark, docs):
     """The benchmark's digest return channel must perform the identical
     extraction: per-doc sha256 over the spans path's output equals the
-    digest path's out_sha, and the byte/span counters match."""
+    digest path's out_sha, and the byte/span counters match. A doc the
+    kernel rejects (null doc_id) is contained as the same error in both,
+    with an empty digest payload."""
     from extract_ocr_spark.pipeline import _digest_spans, extract_digest_df
 
-    spans_rows = extract_df(docs, with_stats=True).collect()
-    digest_rows = {r["doc_id"]: r for r in extract_digest_df(docs).collect()}
-    assert len(digest_rows) == N_DOCS
+    bad = spark.createDataFrame(
+        [(None, [("text", "x", None, 0)])],
+        schema="doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    mixed = docs.unionByName(bad)
+    spans_rows = extract_df(mixed, with_stats=True).collect()
+    digest_rows = extract_digest_df(mixed).collect()
+    (s_err,) = [r for r in spans_rows if r["error"] is not None]
+    (d_err,) = [r for r in digest_rows if r["error"] is not None]
+    assert "ValueError" in s_err["error"] and d_err["error"] == s_err["error"]
+    assert (d_err["out_sha"], d_err["spans_out"], d_err["bytes_out"]) == ("", 0, 0)
+    digest_by_id = {r["doc_id"]: r for r in digest_rows if r["error"] is None}
+    assert len(digest_by_id) == N_DOCS
     for r in spans_rows:
-        d = digest_rows[r["doc_id"]]
+        if r["error"] is not None:
+            continue
+        d = digest_by_id[r["doc_id"]]
         expect_sha = _digest_spans([s.asDict() for s in r["out_spans"]])
         assert d["out_sha"] == expect_sha
         assert d["spans_out"] == r["spans_out"]
