@@ -55,7 +55,12 @@ MINHASH_THRESHOLD = 0.8
 # Shingles present in more than this many documents are dropped before
 # inverted-index self-joins (stop-shingle frequency cap).
 SHINGLE_DF_CAP = 128
-# Refuse the exact O(n²) embedding twin beyond this input size.
+# Refuse the exact O(n²) embedding twin beyond this input size. Worst
+# case at the guard: embedding_neardup_pairs localCheckpoints the
+# UNFILTERED pair frame, n(n-1)/2 ≈ 2×10^8 rows of ~28 bytes, i.e.
+# ~5-6 GB of executor storage; localCheckpoint is not reliable, so a
+# lost block aborts the job instead of recomputing. Raising this guard
+# means moving that checkpoint after a cheap pre-filter first.
 MAX_EXACT_PAIR_ROWS = 20_000
 
 _SIMHASH_BITS = 60  # 15 hex chars of md5 → fits a signed int64

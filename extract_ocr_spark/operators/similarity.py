@@ -48,14 +48,43 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"), "label")
 
 
+def _lit_sql(vec, long: bool = False) -> str:
+    """Spark SQL text of a literal vector: the ONE way this module embeds
+    a vector in a plan. One ``F.expr`` over it is one Py4J round trip,
+    where ``F.array`` of ``F.lit`` pays one per element (~0.25 ms; ~2 ms
+    with ``.cast("long")``). Doubles are their ``repr`` plus the ``D``
+    suffix, so each parses to the identical double; a BIGINT vector is
+    cast once. Embed each vector once: a whole table literal indexed per
+    fold is re-analysed at every index (16×64: 1.8 s vs 0.1 s)."""
+    if long:
+        ints = ", ".join(str(int(v)) for v in vec)
+        return f"CAST(array({ints}) AS ARRAY<BIGINT>)"
+    vals = [float(v) for v in vec]
+    if not all(map(math.isfinite, vals)):
+        raise ValueError(f"non-finite value in a literal vector: {vals}")
+    return f"array({', '.join(repr(v) + 'D' for v in vals)})"
+
+
+def _argmin_d2_sql(col: str, table, key: str) -> str:
+    """The nearest literal BIGINT vector of ``table`` to array column
+    ``col`` as ``array_min`` over ``named_struct('d', d², key, i)``: ties
+    go to the lowest ``i``; a null ``d`` (null, short or null-bearing
+    vector) sorts first, so index 0 wins. NOTE: HOF folds kept (unrolled
+    64-term chains measured slower); their cost was flat in row count,
+    nearly all Py4J literal casts, so the whole argmin is one SQL text."""
+    return "array_min(array(" + ", ".join(
+        f"named_struct('d', aggregate(zip_with({col}, {_lit_sql(c, long=True)}, "
+        f"(a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x), '{key}', {i})"
+        for i, c in enumerate(table)) + "))"
+
+
 def _cosine_to_lit(emb_col, qvec: list[float]):
-    # NOTE(r6): HOF folds kept deliberately. An unrolled 64-term codegen
-    # chain was measured SLOWER here (ann_topk 0.69 s → 1.36 s): these
-    # queries touch few rows, and the big generated method recompiles on
-    # every invocation (fresh expression ids defeat the codegen cache),
-    # costing more than the interpreted fold saves. Unrolled folds only
-    # pay on large pair frames — see dedup.embedding_neardup_pairs.
-    q = F.array(*[F.lit(float(v)) for v in qvec])
+    # NOTE: HOF folds kept deliberately: an unrolled 64-term codegen chain
+    # measured SLOWER (ann_topk 0.69 s → 1.36 s; the big generated method
+    # recompiles per invocation), paying only on large pair frames (see
+    # dedup.embedding_neardup_pairs). A HOF site's cost is flat in row
+    # count and dominated by Python-side Py4J construction: one literal.
+    q = F.expr(_lit_sql(qvec))
     dot = F.aggregate(F.zip_with(emb_col, q, lambda x, y: x * y),
                       F.lit(0.0), lambda acc, v: acc + v)
     ne = F.sqrt(F.aggregate(F.transform(emb_col, lambda x: x * x),
@@ -132,20 +161,16 @@ def _vec_sql(v: np.ndarray) -> str:
 def _bucket_expr(emb_col):
     """Native LSH bucket id: sign bits of dot products with literal
     hyperplanes, packed into an int."""
-    # NOTE(r6): HOF folds kept — unrolling the 8 plane dots (512 terms)
-    # regressed every bucket-deriving query (mrr_eval 1.5 s → 5 s) via
-    # per-invocation codegen compilation; see the _cosine_to_lit note.
-    planes = _hyperplanes()
+    # NOTE: HOF folds kept — unrolling the 8 plane dots (512 terms)
+    # regressed every bucket-deriving query (mrr_eval 1.5 s → 5 s); the
+    # planes are one literal each (Py4J cost: see _cosine_to_lit).
     bits = []
-    for p in range(_N_PLANES):
-        plane = F.array(*[F.lit(float(v)) for v in planes[p]])
-        dot = F.aggregate(F.zip_with(emb_col, plane, lambda x, y: x * y),
+    for p, plane in enumerate(_hyperplanes()):
+        dot = F.aggregate(F.zip_with(emb_col, F.expr(_lit_sql(plane)),
+                                     lambda x, y: x * y),
                           F.lit(0.0), lambda acc, v: acc + v)
         bits.append(F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
+    return sum(bits[1:], bits[0])
 
 
 def _bucket_sql(emb_expr: str) -> str:
@@ -277,8 +302,8 @@ _FOLD_NORM = ("sqrt(list_reduce(list_prepend(0.0, list_transform("
 
 
 def _pair_cosine(a, b):
-    # NOTE(r6): HOF folds kept — semdedup's candidate frames are small
-    # and the unrolled form measured slower (see _cosine_to_lit note).
+    # NOTE: HOF folds kept — the unrolled form measured slower; with no
+    # literal vectors, its Py4J construction is a fixed handful of calls.
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
                       F.lit(0.0), lambda acc, v: acc + v)
     na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
@@ -293,19 +318,14 @@ def _cell_expr(emb_col):
     centroids), as one linear native expression: 16 dot products into an
     array, argmax via array_position(max). (A chained when/otherwise would
     nest the running best twice per step → exponential plan size.)"""
-    # NOTE(r6): kept as HOF folds deliberately — unrolling all 16
-    # centroid dots (16 × 64 terms) bloats the plan past the codegen
-    # method limits and measured ~2× SLOWER (semdedup 4.2 s → 9.9 s).
-    # Unrolled folds only pay when a plan carries a handful of them.
-    cents = _centroids()
+    # NOTE: HOF folds kept — unrolling all 16 centroid dots (16 × 64
+    # terms) bloats the plan past the codegen method limits and measured
+    # ~2× SLOWER (semdedup 4.2 s → 9.9 s). The cost that mattered was
+    # flat in row count: 1,024 Py4J F.lit calls, now 16 _lit_sql ones.
     dots = F.array(*[
-        F.aggregate(
-            F.zip_with(emb_col,
-                       F.array(*[F.lit(float(v)) for v in cents[i]]),
-                       lambda x, y: x * y),
-            F.lit(0.0), lambda acc, v: acc + v)
-        for i in range(_N_CELLS)
-    ])
+        F.aggregate(F.zip_with(emb_col, F.expr(_lit_sql(c)), lambda x, y: x * y),
+                    F.lit(0.0), lambda acc, v: acc + v)
+        for c in _centroids()])
     return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
 
 
@@ -346,14 +366,18 @@ def ann_topk_ivf(spark, sf_dir):
     )
 
 
-def _ivf_sql() -> str:
+def _cents_values() -> str:
+    """The 16 literal centroids as DuckDB ``VALUES`` rows (cell, c)."""
     cents = _centroids()
-    values = ",\n       ".join(
+    return ",\n       ".join(
         f"({i}, {_vec_sql(cents[i])})" for i in range(_N_CELLS))
+
+
+def _ivf_sql() -> str:
     return f"""
 WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings),
 cents(cell, c) AS (VALUES
-       {values}),
+       {_cents_values()}),
 assigned AS (
   SELECT e.vec_id, e.label, e.emb,
          (SELECT cell FROM cents
@@ -456,13 +480,10 @@ def semdedup_df(emb: DataFrame, tau: float = SEMDEDUP_TAU) -> DataFrame:
 
 
 def _semdedup_sql() -> str:
-    cents = _centroids()
-    values = ",\n       ".join(
-        f"({i}, {_vec_sql(cents[i])})" for i in range(_N_CELLS))
     return f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
 cents(cell, c) AS (VALUES
-       {values}),
+       {_cents_values()}),
 assigned AS (
   SELECT e.vec_id, e.emb,
          (SELECT cell FROM cents
@@ -677,7 +698,7 @@ def ann_topk_int8(spark, sf_dir):
         F.transform(
             "emb",
             lambda x: F.floor(x / F.col("s") + F.lit(0.5)).cast("long")))
-    qlit = F.array(*[F.lit(int(v)) for v in qv])
+    qlit = F.expr(_lit_sql(qv, long=True))
     dot = F.aggregate(F.zip_with("q", qlit, lambda x, y: x * y),
                       F.lit(0).cast("long"), lambda a, v: a + v)
     n2 = F.aggregate(F.transform("q", lambda x: x * x),
@@ -833,6 +854,15 @@ def _trunc_div(s: int, n: int) -> int:
     return s // n if s >= 0 else -((-s) // n)
 
 
+def _kmeans_update(qv: DataFrame, cents: list[list[int]]) -> DataFrame:
+    """One Lloyd update's (cid, dim) sums and counts; the assignment is
+    selected BEFORE the posexplode, so each vector is scored once."""
+    return (qv.selectExpr(f"{_argmin_d2_sql('q', cents, 'cid')}.cid AS cid", "q")
+            .select("cid", F.posexplode("q").alias("dim", "v"))
+            .groupBy("cid", "dim")
+            .agg(F.sum("v").alias("s"), F.count("*").alias("n")))
+
+
 def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained k-means (Lloyd's algorithm, K=8, 2 iterations) over the
     embeddings table — the real version of the seeded-random centroids the
@@ -864,35 +894,16 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         cents = [[int(v) for v in r["q"]]
                  for r in qv.orderBy("vec_id").limit(_KMEANS_K).collect()]
         dim = len(cents[0])
-
-        def best_of(centroids):
-            # NOTE(r6): HOF folds kept — K centroids × iterations of
-            # unrolled 64-term chains bloat the plan (measured slower).
-            structs = []
-            for cid, c in enumerate(centroids):
-                lit = F.array(*[F.lit(v).cast("long") for v in c])
-                d2 = F.aggregate(
-                    F.zip_with("q", lit, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0).cast("long"), lambda acc, x: acc + x)
-                # named_struct: .alias inside F.struct does not survive
-                # complex (higher-order-function) children in Spark 4
-                structs.append(F.named_struct(
-                    F.lit("d"), d2, F.lit("cid"), F.lit(cid)))
-            return F.array_min(F.array(*structs))
-
         for _ in range(_KMEANS_ITERS - 1):
-            sums = (qv.select(best_of(cents)["cid"].alias("cid"),
-                              F.posexplode("q").alias("dim", "v"))
-                    .groupBy("cid", "dim")
-                    .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
-                    .collect())  # bounded: K*dim rows
+            sums = _kmeans_update(qv, cents).collect()  # bounded: K*dim rows
             newc: dict[int, list[int]] = {}
             for r in sums:
                 newc.setdefault(int(r["cid"]), [0] * dim)[int(r["dim"])] = \
                     _trunc_div(int(r["s"]), int(r["n"]))
             cents = [newc.get(i, cents[i]) for i in range(_KMEANS_K)]
 
-        return qv.select("vec_id", best_of(cents).alias("b")).select(
+        best = _argmin_d2_sql("q", cents, "cid")
+        return qv.selectExpr("vec_id", f"{best} AS b").select(
             "vec_id", F.col("b.cid").alias("cluster"),
             F.col("b.d").alias("dist2")).orderBy("vec_id")
     finally:
@@ -1151,9 +1162,9 @@ def contamination_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise ValueError(
                 f"contamination_embedding: eval vector "
                 f"{int(r['vec_id'])} has zero norm — fix the eval set.")
-        lit = F.array(*[F.lit(x) for x in ev])
-        dot = F.aggregate(F.zip_with("emb", lit, lambda x, y: x * y),
-                          F.lit(0.0), lambda a, x: a + x)
+        dot = F.aggregate(
+            F.zip_with("emb", F.expr(_lit_sql(ev)), lambda x, y: x * y),
+            F.lit(0.0), lambda a, x: a + x)
         c = dot / (na * F.lit(nb))
         structs.append(F.named_struct(
             F.lit("c"), c, F.lit("ni"), F.lit(-int(r["vec_id"])).cast("long")))
@@ -1856,24 +1867,15 @@ def _pq_encode(df: DataFrame, cb: list[list[list[int]]]) -> DataFrame:
     against the literal codebooks, ties → lowest codeword id) to a frame
     carrying the quantized vector column ``q``. Map-only."""
     # stage each subvector once (an inline slice inside the K-way argmin
-    # would re-slice per codeword — the gopher staged-projection lesson)
-    for m in range(_PQ_M):
-        df = df.withColumn(f"s{m}",
-                           F.slice("q", m * _PQ_SUBDIM + 1, _PQ_SUBDIM))
-    for m in range(_PQ_M):
-        # NOTE(r6): HOF folds kept — _PQ_K codewords × _PQ_M unrolled
-        # distance chains bloat the plan (ann_topk_pq measured 3× slower
-        # unrolled); the HOF form stays compact per codeword.
-        structs = []
-        for j in range(_PQ_K):
-            lit = F.array(*[F.lit(v).cast("long") for v in cb[m][j]])
-            d2 = F.aggregate(
-                F.zip_with(f"s{m}", lit, lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"), lambda acc, x: acc + x)
-            structs.append(F.named_struct(
-                F.lit("d"), d2, F.lit("j"), F.lit(j)))
-        df = df.withColumn(f"c{m}", F.array_min(F.array(*structs))["j"])
-    return df.drop(*[f"s{m}" for m in range(_PQ_M)])
+    # would re-slice per codeword — the gopher staged-projection lesson).
+    # NOTE: HOF folds kept (3× slower unrolled); Py4J literals and a plan
+    # re-analysis per withColumn were the cost, so: two selects, SQL codes.
+    staged = df.selectExpr("*", *[
+        f"slice(q, {m * _PQ_SUBDIM + 1}, {_PQ_SUBDIM}) AS s{m}"
+        for m in range(_PQ_M)])
+    return staged.select(*df.columns, *[
+        F.expr(f"{_argmin_d2_sql(f's{m}', cb[m], 'j')}.j").alias(f"c{m}")
+        for m in range(_PQ_M)])
 
 
 def _pq_lut(qq: list[int], cb: list[list[list[int]]]) -> list[list[int]]:
@@ -1888,12 +1890,9 @@ def _pq_lut(qq: list[int], cb: list[list[list[int]]]) -> list[list[int]]:
 def _adc_expr(lut: list[list[int]]):
     """approx_d2 = Σ_m lut[m][c_m] as one literal-lookup expression over
     the code columns ``c0..c{M-1}``."""
-    luts = [F.array(*[F.lit(v).cast("long") for v in lut[m]])
-            for m in range(_PQ_M)]
-    approx = F.element_at(luts[0], F.col("c0") + 1)
-    for m in range(1, _PQ_M):
-        approx = approx + F.element_at(luts[m], F.col(f"c{m}") + 1)
-    return approx
+    return F.expr(" + ".join(
+        f"element_at({_lit_sql(lut[m], long=True)}, c{m} + 1)"
+        for m in range(_PQ_M)))
 
 
 def _pq_scored(spark, sf_dir, cells: list[int] | None = None) -> DataFrame:
@@ -1999,14 +1998,11 @@ def ann_topk_ivfpq(spark, sf_dir):
 
 
 def _ivfpq_sql() -> str:
-    cents = _centroids()
-    values = ",\n       ".join(
-        f"({i}, {_vec_sql(cents[i])})" for i in range(_N_CELLS))
     return f"""
 WITH {_QUANTIZE_CTE},
 e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
 cents(cell, c) AS (VALUES
-       {values}),
+       {_cents_values()}),
 fq AS (SELECT emb FROM e WHERE vec_id = {QUERY_VEC_ID}),
 probe AS (
   SELECT cell FROM cents, fq

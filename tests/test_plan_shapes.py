@@ -450,6 +450,21 @@ def test_kmeans_final_plan_map_only_no_join_no_python(spark):
     assert plan.count("Exchange") == 1, plan
 
 
+def test_kmeans_update_assigns_once_per_vector(spark):
+    """The Lloyd update scores each vector ONCE: the array_min assignment
+    Project sits below the posexplode Generate, never above it (where it
+    would re-run the K x dim fold on every exploded (vector, dim) row)."""
+    from extract_ocr_spark.operators.similarity import _kmeans_update
+
+    qv = spark.createDataFrame([(i, [i, i + 1, i + 2]) for i in range(4)],
+                               "vec_id long, q array<bigint>")
+    plan = _plan(_kmeans_update(qv, [[0, 0, 0], [3, 3, 3]]))
+    assert plan.count("array_min") == 1, plan
+    assert plan.index("Generate posexplode") < plan.index("array_min"), plan
+    for py in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+        assert py not in plan, plan
+
+
 def test_skipgram_pairs_plan_map_only_pairs_one_agg(spark):
     """Pair construction must be slice/zip_with map work — no self-join,
     no window — with partial aggregation absorbing hot stopword pairs."""

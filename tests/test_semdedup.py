@@ -118,6 +118,84 @@ def test_semdedup_refuses_oversized_fixed_cell_input(spark):
         S.semdedup_df(emb)
 
 
+# -- literal vectors and the scoring sites built from them ------------------------
+
+
+def test_lit_sql_round_trips_every_bit(spark):
+    """The one literal-vector helper must embed each double bit-for-bit
+    (a last-ulp drift would move a centroid and break oracle parity),
+    BIGINTs exactly, and refuse non-finite values up front."""
+    import struct
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from extract_ocr_spark.operators.similarity import _hyperplanes, _lit_sql
+
+    awkward = [5e-324, -5e-324, 1e-300, -0.0, 0.0, 1.7976931348623157e308,
+               -1.7976931348623157e308, 0.1, 2 / 3, 1e16, 1e22]
+    vals = awkward + [float(x) for x in _centroids().ravel()] + \
+        [float(x) for x in _hyperplanes().ravel()]
+    longs = [2 ** 62, -(2 ** 62), 0, 7]
+    row = spark.range(1).select(
+        F.expr(_lit_sql(vals)).alias("d"),
+        F.expr(_lit_sql(longs, long=True)).alias("i")).first()
+    assert [struct.pack("<d", v) for v in row["d"]] == \
+        [struct.pack("<d", v) for v in vals]
+    assert row["i"] == longs
+    for bad in (float("inf"), float("-inf"), float("nan")):
+        with pytest.raises(ValueError, match="non-finite"):
+            _lit_sql([0.5, bad])
+
+
+def test_scoring_sites_keep_edge_case_results(spark):
+    """Null, short (2), long (65) and null-bearing vectors, all-zero
+    vectors, ties and BIGINT overflow score exactly as the per-element
+    ``F.lit`` construction did: cell → null; an argmin → index 0 with a null
+    d; all-zero → cell 0; ties → lowest index; overflow raises."""
+    import pytest
+    from pyspark.errors import ArithmeticException
+    from pyspark.sql import functions as F
+
+    from extract_ocr_spark.operators.similarity import (
+        _argmin_d2_sql,
+        _cell_expr,
+        _pq_encode,
+    )
+
+    c5 = [float(x) for x in _centroids()[5]]
+    emb = spark.createDataFrame(
+        [(0, None), (1, [1.0, 2.0]), (2, [0.5] * 65),
+         (3, [0.1] * 63 + [None]), (4, [0.0] * 64), (5, c5),
+         (6, c5[:63] + [None])], "id long, emb array<double>")
+    assert {r["id"]: r["c"] for r in emb.select(
+        "id", _cell_expr(F.col("emb")).alias("c")).collect()} == \
+        {0: None, 1: None, 2: None, 3: None, 4: 0, 5: 5, 6: None}
+
+    cents = [[1] * 64, [5] * 64, [1] * 64]          # 0 and 2 tie
+    q = spark.createDataFrame(
+        [(0, None), (1, [1, 2]), (2, [3] * 65), (3, [1] * 63 + [None]),
+         (4, [1] * 64), (5, [3] * 64), (6, [5] * 64),
+         (7, [5] * 63 + [None]), (8, [7] * 64)], "id long, q array<bigint>")
+    best = F.expr(_argmin_d2_sql("q", cents, "cid"))
+    assert {r["id"]: (r["b"]["d"], r["b"]["cid"]) for r in q.select(
+        "id", best.alias("b")).collect()} == {
+        0: (None, 0), 1: (None, 0), 2: (None, 0), 3: (None, 0), 4: (0, 0),
+        5: (256, 0), 6: (0, 1), 7: (None, 0), 8: (256, 1)}
+
+    cb = [[[1] * 16, [5] * 16, [1] * 16] + [[7] * 16] * 13] * 4
+    assert {r["id"]: (r["c0"], r["c1"], r["c2"], r["c3"])
+            for r in _pq_encode(q, cb).collect()} == {
+        **{i: (0, 0, 0, 0) for i in range(6)},
+        6: (1, 1, 1, 1), 7: (1, 1, 1, 0), 8: (3, 3, 3, 3)}
+
+    big = spark.createDataFrame([(0, [2 ** 62] + [0] * 63)],
+                                "id long, q array<bigint>")
+    for frame in (big.select(best), _pq_encode(big, cb)):
+        with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+            frame.collect()
+
+
 # -- trained k-means --------------------------------------------------------------
 
 
