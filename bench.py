@@ -159,6 +159,16 @@ def timed(fn, attempts: int = 3, extra_if_dirty: int = 2):
     return (min(clean) if clean else min(w for w, *_ in runs)), runs
 
 
+def digest(df) -> None:
+    """Force full computation of every output column of ``df`` without
+    collecting the result set: one count plus a hash sum (the digest
+    channel idea of ``force_extraction``)."""
+    # pmod keeps the running sum far from BIGINT overflow (ANSI mode)
+    df.agg(F.count(F.lit(1)).alias("n"),
+           F.sum(F.pmod(F.xxhash64(*df.columns), F.lit(1_000_000_000)))
+           .alias("digest")).collect()
+
+
 def ensure_corpus(spark) -> str:
     marker = os.path.join(CORPUS_DIR, "_SUCCESS")
     if not os.path.exists(marker):

@@ -85,54 +85,61 @@ def spread_input(df, key: str = "doc_id"):
     return df.repartition(n, key)
 
 
-# -- r6: codegen-friendly vector folds ----------------------------------------
+# -- the one vector-fold builder ---------------------------------------------
 #
-# ``F.aggregate(F.zip_with(...))`` lambdas are INTERPRETED per element —
-# a 64-dim cosine costs ~3 HOF folds per pair, and on an O(n²) pair
-# frame that interpretation dominated the whole registry sweep
-# (embedding_neardup_pairs: 118 s at sf0.1, ~60 µs/pair). The helpers
-# below unroll the identical left fold into a plain expression chain —
-# ``((0.0 + t0) + t1) + …`` — which whole-stage codegen compiles, with a
-# runtime size guard falling back to the original HOF fold for arrays
-# of any other length, so the float result is bit-identical for every
-# input (same seed, same association order, IEEE multiply is exact
-# either way; verified pairwise over all sf0.1 pairs, zero bit diffs).
+# Every Spark-side dot, squared norm and cosine is Spark SQL text from
+# here: an ordered left fold ``aggregate(terms, zero, (acc, v) -> acc + v)``
+# over column SQL text, handed to ``F.expr`` in one Py4J call (a Spark 4
+# ``Column`` cannot be rendered back to SQL, so builders take text). The
+# zero is ``0D`` (DOUBLE) or ``0L`` (BIGINT): a bare ``0.0`` parses as
+# DECIMAL.
+#
+# NOTE: HOF folds by default. The ``dim`` form unrolls the same left fold
+# into ``0D + a[0] * b[0] + …``, which whole-stage codegen compiles, behind
+# a runtime size guard that falls back to the HOF fold for any other
+# length, so the result is bit-identical for every input (same order,
+# same products). It wins only on large pair frames
+# (embedding_neardup_pairs 118 s → ~4 s at sf0.1, ~60 µs/pair
+# interpreted). Everywhere else the big generated method measured slower:
+# ann_topk 0.69 → 1.36 s, bucket-deriving queries (mrr_eval) 1.5 → 5 s,
+# the 16-centroid cell assignment (semdedup) 4.2 → 9.9 s, PQ encode ~3×.
 
-def _hof_dot(a, b):
-    from pyspark.sql import functions as F
-
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _hof_sq(a):
-    from pyspark.sql import functions as F
-
-    return F.aggregate(F.transform(a, lambda x: x * x),
-                       F.lit(0.0), lambda acc, v: acc + v)
+def fold_sql(terms: str, zero: str = "0D") -> str:
+    """Ordered left fold (ascending index) of an array expression."""
+    return f"aggregate({terms}, {zero}, (acc, v) -> acc + v)"
 
 
-def fold_dot(a, b, dim: int):
-    """Exact-parity dot product of two array<double> columns: unrolled
-    left fold when both have length ``dim``, HOF fold otherwise."""
-    from pyspark.sql import functions as F
+def dot_sql(a: str, b: str, dim: int | None = None, zero: str = "0D") -> str:
+    """Dot product of two array columns; null when either is null, has a
+    null element, or the lengths differ."""
+    hof = fold_sql(f"zip_with({a}, {b}, (x, y) -> x * y)", zero)
+    if dim is None:
+        return hof
+    chain = " + ".join([zero] + [f"{a}[{i}] * {b}[{i}]" for i in range(dim)])
+    return (f"CASE WHEN size({a}) = {dim} AND size({b}) = {dim} "
+            f"THEN {chain} ELSE {hof} END")
 
-    expr = F.lit(0.0)
-    for i in range(dim):
-        expr = expr + a[i] * b[i]
-    return F.when((F.size(a) == dim) & (F.size(b) == dim),
-                  expr).otherwise(_hof_dot(a, b))
+
+def sq_sql(a: str, dim: int | None = None, zero: str = "0D") -> str:
+    """Sum of squares (the squared L2 norm) of an array column."""
+    hof = fold_sql(f"transform({a}, x -> x * x)", zero)
+    if dim is None:
+        return hof
+    chain = " + ".join([zero] + [f"{a}[{i}] * {a}[{i}]" for i in range(dim)])
+    return f"CASE WHEN size({a}) = {dim} THEN {chain} ELSE {hof} END"
 
 
-def fold_sq(a, dim: int):
-    """Exact-parity sum of squares of an array<double> column (the
-    squared L2 norm; wrap in F.sqrt for the norm)."""
-    from pyspark.sql import functions as F
+def cosine_sql(a: str, b: str, *, na: str | None = None, nb: str | None = None,
+               dim: int | None = None, zero: str = "0D") -> str:
+    """``dot / (sqrt(|a|²) * sqrt(|b|²))``. ``na``/``nb`` replace a norm
+    with given SQL text (a per-vector norm column, a literal). A BIGINT
+    fold (``zero="0L"``) casts its sums to DOUBLE before the division."""
+    def dbl(e: str) -> str:
+        return e if zero == "0D" else f"CAST({e} AS DOUBLE)"
 
-    expr = F.lit(0.0)
-    for i in range(dim):
-        expr = expr + a[i] * a[i]
-    return F.when(F.size(a) == dim, expr).otherwise(_hof_sq(a))
+    na = na or f"sqrt({dbl(sq_sql(a, dim, zero))})"
+    nb = nb or f"sqrt({dbl(sq_sql(b, dim, zero))})"
+    return f"{dbl(dot_sql(a, b, dim, zero))} / ({na} * {nb})"
 
 
 def all_queries():

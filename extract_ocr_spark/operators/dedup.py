@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import WS_RE, fold_dot, fold_sq, md5_long
+from . import WS_RE, cosine_sql, md5_long, spread_input, sq_sql
 
 from ..kernels.dedupkit import lsh_bands, minhash_signature
 
@@ -77,18 +77,10 @@ _HAMMING_MAX = 3
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The test tables are single small parquet files (one input split), so
-    # CPU-heavy downstream stages (shingling, MinHash) would run on one
-    # core: spread rows across the session's parallelism first — a
-    # few-MB shuffle buying a 30× stage speedup. On a real deployment the
-    # source is many files/buckets and already at least as parallel as the
-    # session, so the shuffle is skipped entirely (an unconditional
-    # ``repartition`` would move the whole corpus once for nothing).
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    if df.rdd.getNumPartitions() >= n:
-        return df
-    return df.repartition(n, "doc_id")
+    # CPU-heavy downstream stages (shingling, MinHash): spread a
+    # single-split source across the session's parallelism (a no-op on a
+    # source already that wide; see operators.spread_input).
+    return spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def _with_shingles(docs: DataFrame, k: int = 3) -> DataFrame:
@@ -423,15 +415,6 @@ ORDER BY a_id, b_id
 _EMB_DIM = 64  # the embeddings table's fixed dimensionality
 
 
-def _cosine(a, b):
-    # r6: unrolled codegen folds (bit-identical to the HOF folds — see
-    # operators.fold_dot) instead of three interpreted lambdas per pair.
-    dot = fold_dot(a, b, _EMB_DIM)
-    na = F.sqrt(fold_sq(a, _EMB_DIM))
-    nb = F.sqrt(fold_sq(b, _EMB_DIM))
-    return dot / (na * nb)
-
-
 def embedding_neardup_pairs(spark, sf_dir):
     """Exact cosine ≥ 0.4 pairs over the embeddings table (double math on
     both sides for bit-identical comparison). Deliberately O(n²) — the
@@ -441,9 +424,10 @@ def embedding_neardup_pairs(spark, sf_dir):
 
     r6: each vector's norm is computed once on the 2n-row side frames
     instead of once per pair (n² times), and the dot is the unrolled
-    codegen fold — together 118.8 s → ~4 s at sf0.1 with bit-identical
-    output (norms are per-vector values; the pair expression
-    dot / (na * nb) is unchanged)."""
+    codegen fold (the ``dim`` form of operators.dot_sql) — together
+    118.8 s → ~4 s at sf0.1 with bit-identical output (norms are
+    per-vector values; the pair expression dot / (na * nb) is
+    unchanged)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"))
     n = emb.count()
@@ -452,11 +436,11 @@ def embedding_neardup_pairs(spark, sf_dir):
             f"embedding_neardup_pairs is the exact O(n²) twin; refusing "
             f"{n} rows (> {MAX_EXACT_PAIR_ROWS}). Use "
             f"similarity.embedding_neardup_lsh (bucketed) at scale.")
-    emb = emb.withColumn("nrm", F.sqrt(fold_sq(F.col("emb"), _EMB_DIM)))
+    emb = emb.withColumn("nrm", F.expr(f"sqrt({sq_sql('emb', _EMB_DIM)})"))
     a = emb.alias("a")
     b = emb.alias("b")
-    c = (fold_dot(F.col("a.emb"), F.col("b.emb"), _EMB_DIM)
-         / (F.col("a.nrm") * F.col("b.nrm")))
+    c = F.expr(cosine_sql("a.emb", "b.emb", na="a.nrm", nb="b.nrm",
+                          dim=_EMB_DIM))
     # Materialize the slim (a_id, b_id, c) pair frame once (lazy local
     # checkpoint): the filter and the round both reference c, and the
     # pushed-down predicate would otherwise re-evaluate the 64-term dot

@@ -31,7 +31,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import WS_RE
+from . import WS_RE, cosine_sql, dot_sql, fold_sql, sq_sql
 
 TOP_K = 10
 QUERY_VEC_ID = 0
@@ -48,56 +48,58 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"), "label")
 
 
+def _dbl_sql(v) -> str:
+    """Spark SQL text of one double: its ``repr`` plus the ``D`` suffix,
+    so it parses to the identical double."""
+    v = float(v)
+    if not math.isfinite(v):
+        raise ValueError(f"non-finite value in a literal: {v}")
+    return repr(v) + "D"
+
+
 def _lit_sql(vec, long: bool = False) -> str:
     """Spark SQL text of a literal vector: the ONE way this module embeds
     a vector in a plan. One ``F.expr`` over it is one Py4J round trip,
     where ``F.array`` of ``F.lit`` pays one per element (~0.25 ms; ~2 ms
-    with ``.cast("long")``). Doubles are their ``repr`` plus the ``D``
-    suffix, so each parses to the identical double; a BIGINT vector is
-    cast once. Embed each vector once: a whole table literal indexed per
-    fold is re-analysed at every index (16×64: 1.8 s vs 0.1 s)."""
+    with ``.cast("long")``). Doubles go through ``_dbl_sql``; a BIGINT
+    vector is cast once. Embed each vector once: a whole table literal
+    indexed per fold is re-analysed at every index (16×64: 1.8 s vs
+    0.1 s)."""
     if long:
         ints = ", ".join(str(int(v)) for v in vec)
         return f"CAST(array({ints}) AS ARRAY<BIGINT>)"
-    vals = [float(v) for v in vec]
-    if not all(map(math.isfinite, vals)):
-        raise ValueError(f"non-finite value in a literal vector: {vals}")
-    return f"array({', '.join(repr(v) + 'D' for v in vals)})"
+    return f"array({', '.join(map(_dbl_sql, vec))})"
+
+
+def _fold_dot_py(a, b) -> float:
+    """Python twin of the ordered fold (``operators.dot_sql`` /
+    _FOLD_DOT): 0.0 seed, products added in ascending dimension order —
+    the same IEEE addition sequence, NOT numpy's pairwise sum, so
+    driver-side arithmetic is bit-identical to both engines' folds (a
+    value at a round(6) boundary or a near-tie must not flip)."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
 
 
 def _argmin_d2_sql(col: str, table, key: str) -> str:
     """The nearest literal BIGINT vector of ``table`` to array column
     ``col`` as ``array_min`` over ``named_struct('d', d², key, i)``: ties
     go to the lowest ``i``; a null ``d`` (null, short or null-bearing
-    vector) sorts first, so index 0 wins. NOTE: HOF folds kept (unrolled
-    64-term chains measured slower); their cost was flat in row count,
-    nearly all Py4J literal casts, so the whole argmin is one SQL text."""
+    vector) sorts first, so index 0 wins."""
     return "array_min(array(" + ", ".join(
-        f"named_struct('d', aggregate(zip_with({col}, {_lit_sql(c, long=True)}, "
-        f"(a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x), '{key}', {i})"
+        "named_struct('d', " + fold_sql(
+            f"zip_with({col}, {_lit_sql(c, long=True)}, "
+            "(x, y) -> (x - y) * (x - y))", "0L") + f", '{key}', {i})"
         for i, c in enumerate(table)) + "))"
 
 
-def _cosine_to_lit(emb_col, qvec: list[float]):
-    # NOTE: HOF folds kept deliberately: an unrolled 64-term codegen chain
-    # measured SLOWER (ann_topk 0.69 s → 1.36 s; the big generated method
-    # recompiles per invocation), paying only on large pair frames (see
-    # dedup.embedding_neardup_pairs). A HOF site's cost is flat in row
-    # count and dominated by Python-side Py4J construction: one literal.
-    q = F.expr(_lit_sql(qvec))
-    dot = F.aggregate(F.zip_with(emb_col, q, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    ne = F.sqrt(F.aggregate(F.transform(emb_col, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    # Sequential left fold, NOT np.dot: numpy sums pairwise, the SQL
-    # twin (_FOLD_NORM) folds left-to-right — the same order here makes
-    # the query norm bit-identical across engines instead of
-    # last-ulp-close (a rel at a round(6) boundary must not flip).
-    acc = 0.0
-    for v in qvec:
-        acc += float(v) * float(v)
-    nq = math.sqrt(acc)
-    return dot / (ne * F.lit(nq))
+def _cosine_to_lit(col: str, qvec: list[float]):
+    """Cosine of array column ``col`` (SQL text) to a literal query
+    vector, whose norm is computed driver-side as a literal."""
+    nq = math.sqrt(_fold_dot_py(qvec, qvec))
+    return F.expr(cosine_sql(col, _lit_sql(qvec), nb=_dbl_sql(nq)))
 
 
 def _query_vector(spark: SparkSession, sf_dir: str) -> list[float]:
@@ -122,7 +124,7 @@ def ann_topk(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     _guard_brute(emb, "ann_topk")
     qvec = _query_vector(spark, sf_dir)
-    c = _cosine_to_lit(F.col("emb"), qvec)
+    c = _cosine_to_lit("emb", qvec)
     return (
         emb.filter(F.col("vec_id") != QUERY_VEC_ID)
         .select("vec_id", "label", F.round(c, 6).alias("cosine"))
@@ -158,19 +160,13 @@ def _vec_sql(v: np.ndarray) -> str:
     return "[" + ", ".join(repr(float(x)) for x in v) + "]::DOUBLE[]"
 
 
-def _bucket_expr(emb_col):
-    """Native LSH bucket id: sign bits of dot products with literal
-    hyperplanes, packed into an int."""
-    # NOTE: HOF folds kept — unrolling the 8 plane dots (512 terms)
-    # regressed every bucket-deriving query (mrr_eval 1.5 s → 5 s); the
-    # planes are one literal each (Py4J cost: see _cosine_to_lit).
-    bits = []
-    for p, plane in enumerate(_hyperplanes()):
-        dot = F.aggregate(F.zip_with(emb_col, F.expr(_lit_sql(plane)),
-                                     lambda x, y: x * y),
-                          F.lit(0.0), lambda acc, v: acc + v)
-        bits.append(F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    return sum(bits[1:], bits[0])
+def _bucket_expr(col: str):
+    """Native LSH bucket id of array column ``col`` (SQL text): sign bits
+    of dot products with literal hyperplanes, packed into an int."""
+    return F.expr(" + ".join(
+        f"CASE WHEN {dot_sql(col, _lit_sql(plane))} > 0 "
+        f"THEN {1 << p} ELSE 0 END"
+        for p, plane in enumerate(_hyperplanes())))
 
 
 def _bucket_sql(emb_expr: str) -> str:
@@ -194,8 +190,8 @@ def ann_topk_lsh(spark, sf_dir):
     qbits = sum((1 << p) for p in range(_N_PLANES)
                 if float(np.dot(planes[p], qvec)) > 0)
     probe = [qbits] + [qbits ^ (1 << p) for p in range(_N_PLANES)]
-    emb = _emb(spark, sf_dir).withColumn("bucket", _bucket_expr(F.col("emb")))
-    c = _cosine_to_lit(F.col("emb"), qvec)
+    emb = _emb(spark, sf_dir).withColumn("bucket", _bucket_expr("emb"))
+    c = _cosine_to_lit("emb", qvec)
     return (
         emb.filter(F.col("bucket").isin(probe))
         .filter(F.col("vec_id") != QUERY_VEC_ID)
@@ -233,13 +229,11 @@ def embedding_neardup_lsh(spark, sf_dir):
     662k collision rows → 299k unique pairs at sf0.1). Embeddings are
     re-attached to the unique pairs with per-vector norms computed once
     on the side frame, the dot is the unrolled codegen fold
-    (bit-identical — operators.fold_dot), and the slim scored frame is
+    (bit-identical — operators.dot_sql), and the slim scored frame is
     lazily checkpointed so the threshold filter cannot re-evaluate it.
     Same rows out (a pair's cosine is the same wherever computed);
     measured 12.8 s → ~2 s at sf0.1."""
-    from . import fold_dot, fold_sq
-
-    emb = _emb(spark, sf_dir).withColumn("bucket", _bucket_expr(F.col("emb")))
+    emb = _emb(spark, sf_dir).withColumn("bucket", _bucket_expr("emb"))
     # multiprobe: each vector lands in its bucket plus the 8 single-bit
     # neighbors → any pair within bucket-Hamming distance 2 collides.
     probes = F.array(
@@ -257,7 +251,7 @@ def embedding_neardup_lsh(spark, sf_dir):
         .dropDuplicates(["a_id", "b_id"])
     )
     side = emb.select("vec_id", "emb").withColumn(
-        "nrm", F.sqrt(fold_sq(F.col("emb"), _DIM)))
+        "nrm", F.expr(f"sqrt({sq_sql('emb', _DIM)})"))
     cands = (
         pair_ids
         .join(side.select(F.col("vec_id").alias("a_id"),
@@ -267,7 +261,7 @@ def embedding_neardup_lsh(spark, sf_dir):
                           F.col("emb").alias("eb"),
                           F.col("nrm").alias("nb")), "b_id")
     )
-    c = fold_dot(F.col("ea"), F.col("eb"), _DIM) / (F.col("na") * F.col("nb"))
+    c = F.expr(cosine_sql("ea", "eb", na="na", nb="nb", dim=_DIM))
     slim = cands.select("a_id", "b_id", c.alias("cosine")) \
                 .localCheckpoint(eager=False)
     return (
@@ -290,8 +284,8 @@ ORDER BY a_id, b_id
 """
 
 
-# The ONE SQL twin of the ordered cosine fold (_cosine_to_lit /
-# _pair_cosine): dot and norms fold in ascending dimension order with a
+# The ONE DuckDB twin of the ordered cosine fold (operators.cosine_sql):
+# dot and norms fold in ascending dimension order with a
 # 0.0 seed. Every fold-mirroring oracle interpolates these — a second
 # hand-rolled copy could drift by seed or zip order and reintroduce the
 # last-ulp rank-flip these folds exist to prevent.
@@ -301,49 +295,27 @@ _FOLD_NORM = ("sqrt(list_reduce(list_prepend(0.0, list_transform("
               "{a}, x -> x * x)), (x, y) -> x + y))")
 
 
-def _pair_cosine(a, b):
-    # NOTE: HOF folds kept — the unrolled form measured slower; with no
-    # literal vectors, its Py4J construction is a fixed handful of calls.
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    return dot / (na * nb)
-
-
-def _cell_expr(emb_col):
-    """Nearest-centroid cell id (argmax dot over the 16 seeded literal
-    centroids), as one linear native expression: 16 dot products into an
-    array, argmax via array_position(max). (A chained when/otherwise would
-    nest the running best twice per step → exponential plan size.)"""
-    # NOTE: HOF folds kept — unrolling all 16 centroid dots (16 × 64
-    # terms) bloats the plan past the codegen method limits and measured
-    # ~2× SLOWER (semdedup 4.2 s → 9.9 s). The cost that mattered was
-    # flat in row count: 1,024 Py4J F.lit calls, now 16 _lit_sql ones.
-    dots = F.array(*[
-        F.aggregate(F.zip_with(emb_col, F.expr(_lit_sql(c)), lambda x, y: x * y),
-                    F.lit(0.0), lambda acc, v: acc + v)
-        for c in _centroids()])
-    return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
+def _cell_expr(col: str):
+    """Nearest-centroid cell id of array column ``col`` (SQL text): argmax
+    dot over the 16 seeded literal centroids, as one linear native
+    expression — 16 dot products into an array, argmax via
+    array_position(max). (A chained when/otherwise would nest the running
+    best twice per step → exponential plan size.)"""
+    dots = "array(" + ", ".join(
+        dot_sql(col, _lit_sql(c)) for c in _centroids()) + ")"
+    return F.expr(
+        f"CAST(array_position({dots}, array_max({dots})) - 1 AS INT)")
 
 
 def _probe_cells(qvec: list[float], probes: int = _IVF_PROBES) -> list[int]:
     """The query's nearest cells by centroid dot product — the ONE probe
     rule every IVF-family query and the serving job share. Sums are a
-    sequential left fold (the order ``_cell_expr``'s ``F.aggregate`` and
-    ``_cosine_to_lit`` already canonicalized — numpy's pairwise ``@``
-    could drift a near-tie by an ulp vs the oracle's list_dot_product)
-    and the sort carries the oracle's exact ``DESC, cell`` tie-break
-    (``np.argsort`` is unstable and has no cell tie-break)."""
-    cents = _centroids()
-    sims = []
-    for i in range(_N_CELLS):
-        acc = 0.0
-        for a, b in zip(cents[i], qvec):
-            acc += float(a) * float(b)
-        sims.append(acc)
+    sequential left fold (``_fold_dot_py``, the order ``_cell_expr``'s
+    fold uses — numpy's pairwise ``@`` could drift a near-tie by an ulp
+    vs the oracle's list_dot_product) and the sort carries the oracle's
+    exact ``DESC, cell`` tie-break (``np.argsort`` is unstable and has
+    no cell tie-break)."""
+    sims = [_fold_dot_py(c, qvec) for c in _centroids()]
     return sorted(range(_N_CELLS), key=lambda i: (-sims[i], i))[:probes]
 
 
@@ -355,8 +327,8 @@ def ann_topk_ivf(spark, sf_dir):
     qvec = _query_vector(spark, sf_dir)
     probe_cells = _probe_cells(qvec)
 
-    emb = _emb(spark, sf_dir).withColumn("cell", _cell_expr(F.col("emb")))
-    c = _cosine_to_lit(F.col("emb"), qvec)
+    emb = _emb(spark, sf_dir).withColumn("cell", _cell_expr("emb"))
+    c = _cosine_to_lit("emb", qvec)
     return (
         emb.filter(F.col("cell").isin(probe_cells))
         .filter(F.col("vec_id") != QUERY_VEC_ID)
@@ -444,7 +416,7 @@ def semdedup_df(emb: DataFrame, tau: float = SEMDEDUP_TAU) -> DataFrame:
     # (the r2 self-join-over-unmaterialized-frame lesson); the result is
     # localCheckpointed eagerly so unpersist below is safe.
     assigned = emb.withColumn(
-        "cell", _cell_expr(F.col("emb"))).select(
+        "cell", _cell_expr("emb")).select(
             "vec_id", "emb", "cell").persist()
     try:
         n = assigned.count()
@@ -457,7 +429,7 @@ def semdedup_df(emb: DataFrame, tau: float = SEMDEDUP_TAU) -> DataFrame:
                 f"recipe (re-seed _centroids with more cells) instead.")
         a = assigned.alias("a")
         b = assigned.alias("b")
-        c = _pair_cosine(F.col("a.emb"), F.col("b.emb"))
+        c = F.expr(cosine_sql("a.emb", "b.emb"))
         pairs = (
             a.join(b, (F.col("a.cell") == F.col("b.cell"))
                    & (F.col("a.vec_id") < F.col("b.vec_id")))
@@ -659,6 +631,23 @@ def _quantize_py(vec: list[float]) -> tuple[list[int], int]:
     return q, sum(v * v for v in q)
 
 
+def _int8_quant(df: DataFrame, col: str, out: str) -> DataFrame:
+    """Add ``out``: the in-engine twin of ``_quantize_py`` over array
+    column ``col`` (SQL text) — s = max|v|/127, q = floor(v/s + 0.5) as
+    BIGINT, all zeros when s = 0. The scale is STAGED as its own column:
+    referenced inside the per-element lambda, an inline array_max would
+    re-scan the vector per component (O(dim²) per row: 200k × 64 took
+    ~15 s against ~1.2 s staged — the gopher staged-projection lesson)."""
+    s = f"{out}_scale"
+    return (df.withColumn(s, F.expr(
+                f"array_max(transform({col}, x -> abs(x))) / {INT8_LEVELS}"))
+            .withColumn(out, F.expr(
+                f"CASE WHEN {s} = 0 THEN transform({col}, x -> 0L) "
+                f"ELSE transform({col}, "
+                f"x -> CAST(floor(x / {s} + 0.5D) AS BIGINT)) END"))
+            .drop(s))
+
+
 def ann_topk_int8(spark, sf_dir):
     """Exact-arithmetic int8-quantized cosine top-10 — the memory-
     bandwidth scale path for brute scans: at 10^9+ vectors the working
@@ -684,31 +673,10 @@ def ann_topk_int8(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     _guard_brute(emb, "ann_topk_int8")
     qv, nq2 = _quantize_py(_query_vector(spark, sf_dir))
-
-    # the scale denominator is STAGED as its own column: referenced once
-    # per element inside the transform lambda, an inline array_max would
-    # re-scan the vector per component (O(dim^2)/row — the gopher
-    # staged-projection lesson)
-    s = (F.array_max(F.transform("emb", lambda x: F.abs(x)))
-         / INT8_LEVELS)
-    quant = F.when(
-        F.col("s") == 0,
-        F.transform("emb", lambda x: F.lit(0).cast("long"))
-    ).otherwise(
-        F.transform(
-            "emb",
-            lambda x: F.floor(x / F.col("s") + F.lit(0.5)).cast("long")))
-    qlit = F.expr(_lit_sql(qv, long=True))
-    dot = F.aggregate(F.zip_with("q", qlit, lambda x, y: x * y),
-                      F.lit(0).cast("long"), lambda a, v: a + v)
-    n2 = F.aggregate(F.transform("q", lambda x: x * x),
-                     F.lit(0).cast("long"), lambda a, v: a + v)
-    cos_q = (dot.cast("double")
-             / (F.sqrt(n2.cast("double"))
-                * F.sqrt(F.lit(float(nq2)))))
-    return (emb.filter(F.col("vec_id") != QUERY_VEC_ID)
-            .withColumn("s", s)
-            .withColumn("q", quant)
+    cos_q = F.expr(cosine_sql("q", _lit_sql(qv, long=True), zero="0L",
+                              nb=f"sqrt({_dbl_sql(nq2)})"))
+    corpus = emb.filter(F.col("vec_id") != QUERY_VEC_ID)
+    return (_int8_quant(corpus, "emb", "q")
             .withColumn("cos_q", cos_q)
             .orderBy(F.desc("cos_q"), "vec_id").limit(TOP_K)
             .select("vec_id", "label",
@@ -776,9 +744,7 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    norm = F.sqrt(F.aggregate(
-        F.col("embedding"), F.lit(0.0),
-        lambda a, x: a + x.cast("double") * x.cast("double")))
+    norm = F.expr(f"sqrt({sq_sql('CAST(embedding AS ARRAY<DOUBLE>)')})")
     w = Window.partitionBy("label").orderBy("norm", "vec_id")
     wn = Window.partitionBy("label")
     # ceil(n/10) — Column `/` is DOUBLE division, so floor it back to an
@@ -1031,17 +997,9 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = [1.0] * _DIM
     nrm = 0.0
     for _ in range(_PCA_ITERS):
-        m = []
-        for i in range(_DIM):
-            acc = 0.0
-            row = af[i]
-            for j in range(_DIM):       # ascending j: the oracle's order
-                acc += row[j] * v[j]
-            m.append(acc)
-        s = 0.0
-        for x in m:                      # ascending i
-            s += x * x
-        nrm = math.sqrt(s)
+        # ascending j, then ascending i: the oracle's fold orders
+        m = [_fold_dot_py(af[i], v) for i in range(_DIM)]
+        nrm = math.sqrt(_fold_dot_py(m, m))
         if nrm == 0.0:                   # A v vanished (exact cancellation)
             raise ValueError(
                 "pca_top_component: power iteration hit a zero vector "
@@ -1144,31 +1102,22 @@ def contamination_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with an opaque DIVIDE_BY_ZERO deep in a task (and return NULLs on
     # non-ANSI) — assert per-row with a message instead; the eval side
     # is checked driver-side below
-    raw_na = F.aggregate(F.transform("emb", lambda x: x * x),
-                         F.lit(0.0), lambda a, x: a + x)
-    na = (F.when(raw_na > 0, F.sqrt(raw_na))
-          .otherwise(F.raise_error(F.lit(
-              "contamination_embedding: zero-norm corpus vector — "
-              "quarantine degenerate embeddings first "
-              "(see embedding_norm_outliers)"))))
+    raw_na = sq_sql("emb")
+    na = (f"CASE WHEN {raw_na} > 0 THEN sqrt({raw_na}) ELSE raise_error("
+          "'contamination_embedding: zero-norm corpus vector — "
+          "quarantine degenerate embeddings first "
+          "(see embedding_norm_outliers)') END")
     structs = []
     for r in evs:
         ev = [float(x) for x in r["emb"]]
-        nb_acc = 0.0
-        for y in ev:                    # ascending dim: the oracle's order
-            nb_acc += y * y
-        nb = math.sqrt(nb_acc)
+        nb = math.sqrt(_fold_dot_py(ev, ev))   # the oracle's fold order
         if nb == 0.0:
             raise ValueError(
                 f"contamination_embedding: eval vector "
                 f"{int(r['vec_id'])} has zero norm — fix the eval set.")
-        dot = F.aggregate(
-            F.zip_with("emb", F.expr(_lit_sql(ev)), lambda x, y: x * y),
-            F.lit(0.0), lambda a, x: a + x)
-        c = dot / (na * F.lit(nb))
-        structs.append(F.named_struct(
-            F.lit("c"), c, F.lit("ni"), F.lit(-int(r["vec_id"])).cast("long")))
-    best = F.array_max(F.array(*structs))
+        c = cosine_sql("emb", _lit_sql(ev), na=na, nb=_dbl_sql(nb))
+        structs.append(f"named_struct('c', {c}, 'ni', {-int(r['vec_id'])}L)")
+    best = F.expr(f"array_max(array({', '.join(structs)}))")
     return (corpus.select("vec_id", best.alias("b"))
             .select("vec_id",
                     (-F.col("b.ni")).alias("best_eval_id"),
@@ -1230,7 +1179,7 @@ def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select(F.col("vec_id").alias("q_id"),
                  F.col("emb").alias("q_emb"),
                  F.col("label").alias("q_label")))
-    c = _pair_cosine(F.col("q_emb"), F.col("emb"))
+    c = F.expr(cosine_sql("q_emb", "emb"))
     from pyspark.sql import Window
     w = Window.partitionBy("q_id").orderBy(F.desc("c"), "neg_id")
     return (emb.join(F.broadcast(q), emb["label"] != q["q_label"])
@@ -1284,17 +1233,6 @@ MMR_LAM = "0.7"
 MMR_OML = "0.3"
 
 
-def _fold_dot_py(a, b) -> float:
-    """Python twin of the ordered fold (_cosine_to_lit / _FOLD_DOT):
-    0.0 seed, products added in ascending dimension order — the same
-    IEEE addition sequence, so the driver-side MMR arithmetic is
-    bit-identical to the SQL oracle's."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc += x * y
-    return acc
-
-
 def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal-marginal-relevance rerank (Carbonell & Goldstein 1998) of
     the query's top-MMR_C cosine candidates: greedily pick MMR_K
@@ -1319,18 +1257,12 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     _guard_brute(emb, "mmr_rerank")
     qvec = _query_vector(spark, sf_dir)
-    c = _cosine_to_lit(F.col("emb"), qvec)
+    c = _cosine_to_lit("emb", qvec)
     cands = (emb.filter(F.col("vec_id") != QUERY_VEC_ID)
              .select("vec_id", "label", F.round(c, 6).alias("rel"), "emb")
              .orderBy(F.desc("rel"), "vec_id")
              .limit(MMR_C)
              .collect())
-
-    def norm(a) -> float:
-        acc = 0.0
-        for x in a:
-            acc += x * x
-        return math.sqrt(acc)
 
     def r6(x: float) -> float:
         return float(Decimal(repr(x)).quantize(Decimal("0.000001"),
@@ -1338,7 +1270,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lam, oml = float(MMR_LAM), float(MMR_OML)
     embs = {r["vec_id"]: list(r["emb"]) for r in cands}
-    norms = {v: norm(e) for v, e in embs.items()}
+    norms = {v: math.sqrt(_fold_dot_py(e, e)) for v, e in embs.items()}
 
     def sim(i: int, j: int) -> float:
         return (_fold_dot_py(embs[i], embs[j])
@@ -1443,14 +1375,14 @@ def _lsh_eval_frames(spark, sf_dir):
     NDCG_NQ-row broadcast (the hard_negatives pattern)."""
     from pyspark.sql.window import Window
 
-    emb = _emb(spark, sf_dir).withColumn("bucket", _bucket_expr(F.col("emb")))
+    emb = _emb(spark, sf_dir).withColumn("bucket", _bucket_expr("emb"))
     q = (emb.filter(F.col("vec_id") < NDCG_NQ)
          .select(F.col("vec_id").alias("qid"), F.col("emb").alias("qemb"),
                  F.col("bucket").alias("qbucket")))
     pairs = (
         emb.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("qid"))
-        .withColumn("cosine", _pair_cosine(F.col("emb"), F.col("qemb")))
+        .withColumn("cosine", F.expr(cosine_sql("emb", "qemb")))
     )
     wq = Window.partitionBy("qid").orderBy(F.desc("cosine"), "vec_id")
     exact = (
@@ -1584,20 +1516,6 @@ ORACLES["ndcg_eval"] = NDCG_EVAL_SQL
 _MRR_RR = [round(1_000_000 / i) for i in range(1, TOP_K + 1)]
 
 
-def _int8_quant(col):
-    """Per-vector symmetric int8 quantization (the ann_topk_int8 chain,
-    verbatim: s = max|v|/127, q = floor(v/s + 0.5)) as an expression
-    over any array<double> column — the approximate scorer mrr_eval
-    ranks candidates with."""
-    m = F.array_max(F.transform(col, lambda x: F.abs(x)))
-    sc = m / INT8_LEVELS
-    return F.when(
-        m == 0, F.transform(col, lambda x: F.lit(0).cast("long"))
-    ).otherwise(
-        F.transform(col, lambda x: F.floor(x / sc + F.lit(0.5))
-                    .cast("long")))
-
-
 def mrr_eval(spark, sf_dir):
     """Reciprocal rank of the TRUE nearest neighbor (the exact cosine
     top-1) inside the APPROXIMATELY-ranked LSH candidate list, per
@@ -1625,17 +1543,8 @@ def mrr_eval(spark, sf_dir):
 
     q, exact, _, probed = _lsh_eval_frames(spark, sf_dir)
     best = exact.filter(F.col("rel") == TOP_K).select("qid", "vec_id")
-    scored = (probed
-              .withColumn("qa", _int8_quant(F.col("emb")))
-              .withColumn("qb", _int8_quant(F.col("qemb"))))
-    dot = F.aggregate(F.zip_with("qa", "qb", lambda x, y: x * y),
-                      F.lit(0).cast("long"), lambda a, v: a + v)
-    na2 = F.aggregate(F.transform("qa", lambda x: x * x),
-                      F.lit(0).cast("long"), lambda a, v: a + v)
-    nb2 = F.aggregate(F.transform("qb", lambda x: x * x),
-                      F.lit(0).cast("long"), lambda a, v: a + v)
-    cos8 = (dot.cast("double")
-            / (F.sqrt(na2.cast("double")) * F.sqrt(nb2.cast("double"))))
+    scored = _int8_quant(_int8_quant(probed, "emb", "qa"), "qemb", "qb")
+    cos8 = F.expr(cosine_sql("qa", "qb", zero="0L"))
     w8 = Window.partitionBy("qid").orderBy(F.desc("cos8"), "vec_id")
     cand8 = (scored.withColumn("cos8", cos8)
              .withColumn("pos", F.row_number().over(w8))
@@ -1738,7 +1647,7 @@ def rrf_fusion(spark, sf_dir):
 
     emb = _emb(spark, sf_dir)
     qvec = _query_vector(spark, sf_dir)
-    c = _cosine_to_lit(F.col("emb"), qvec)
+    c = _cosine_to_lit("emb", qvec)
     vec = (
         emb.filter(F.col("vec_id") != QUERY_VEC_ID)
         .select(F.col("vec_id").alias("doc_id"),
@@ -1916,8 +1825,8 @@ def _pq_scored(spark, sf_dir, cells: list[int] | None = None) -> DataFrame:
 
     if cells is not None:
         kept = (emb
-                .withColumn("cell", _cell_expr(
-                    F.col("embedding").cast("array<double>")))
+                .withColumn("cell",
+                            _cell_expr("CAST(embedding AS ARRAY<DOUBLE>)"))
                 .filter(F.col("cell").isin([int(c) for c in cells]))
                 .select("vec_id", "label",
                         _quantize_expr("embedding").alias("q")))

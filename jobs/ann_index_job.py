@@ -57,7 +57,7 @@ def build(spark, embeddings_path: str, index_dir: str) -> dict:
     base = emb.select(
         "vec_id", "label",
         _quantize_expr("embedding").alias("q"),
-        _cell_expr(F.col("embedding").cast("array<double>")).alias("cell"))
+        _cell_expr("CAST(embedding AS ARRAY<DOUBLE>)").alias("cell"))
     qv = emb.select("vec_id", _quantize_expr("embedding").alias("q"))
     cb = _pq_codebooks(qv)
 

@@ -59,10 +59,21 @@ def test_semdedup_assignment_plan_is_native(spark):
     emb = spark.range(50).selectExpr(
         "id AS vec_id",
         "transform(sequence(1, 64), x -> cast(x AS double)) AS emb")
-    plan = _plan(emb.withColumn("cell", _cell_expr(F.col("emb"))))
+    plan = _plan(emb.withColumn("cell", _cell_expr("emb")))
     assert "Exchange" not in plan, plan
     for py in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert py not in plan, plan
+
+
+def test_int8_quant_stages_its_scale(spark):
+    """The int8 scale is a staged column: ONE array_max per vector, not
+    one more per element inside the quantizing lambda (O(dim²) per row)."""
+    from extract_ocr_spark.operators.similarity import _int8_quant
+
+    emb = spark.range(50).selectExpr(
+        "id", "transform(sequence(1, 64), x -> cast(x + id AS double)) AS emb")
+    plan = _plan(_int8_quant(emb, "emb", "q"))
+    assert plan.count("array_max(") == 1, plan
 
 
 def test_winnow_fingerprints_plan_one_shuffle_no_python(spark):

@@ -247,7 +247,7 @@ def test_ann_topk_ivfpq_pruning_never_rescores(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     kept = {r["vec_id"] for r in emb.select(
         "vec_id",
-        _cell_expr(F.col("embedding").cast("array<double>")).alias("cell"))
+        _cell_expr("CAST(embedding AS ARRAY<DOUBLE>)").alias("cell"))
         .filter(F.col("cell").isin(list(probe))).collect()}
     want = sorted(((global_scores[v], v) for v in kept if v != 0))[:10]
     assert [(v, d) for d, v in want] == got

@@ -151,16 +151,27 @@ def test_lit_sql_round_trips_every_bit(spark):
 def test_scoring_sites_keep_edge_case_results(spark):
     """Null, short (2), long (65) and null-bearing vectors, all-zero
     vectors, ties and BIGINT overflow score exactly as the per-element
-    ``F.lit`` construction did: cell → null; an argmin → index 0 with a null
-    d; all-zero → cell 0; ties → lowest index; overflow raises."""
+    ``F.lit`` and Column-lambda construction did: cell → null; an argmin
+    → index 0 with a null d; all-zero → cell 0, bucket 0, int8 zeros and a
+    DIVIDE_BY_ZERO cosine; ties → lowest index; overflow raises. The
+    unrolled ``dim`` fold is bit-identical to the HOF fold, falling back
+    to it off length (the 65-long sum of squares is 65 terms)."""
+    import struct
+
     import pytest
     from pyspark.errors import ArithmeticException
     from pyspark.sql import functions as F
 
+    from extract_ocr_spark.operators import cosine_sql, dot_sql, sq_sql
     from extract_ocr_spark.operators.similarity import (
         _argmin_d2_sql,
+        _bucket_expr,
         _cell_expr,
+        _cosine_to_lit,
+        _int8_quant,
+        _lit_sql,
         _pq_encode,
+        _quantize_py,
     )
 
     c5 = [float(x) for x in _centroids()[5]]
@@ -169,8 +180,43 @@ def test_scoring_sites_keep_edge_case_results(spark):
          (3, [0.1] * 63 + [None]), (4, [0.0] * 64), (5, c5),
          (6, c5[:63] + [None])], "id long, emb array<double>")
     assert {r["id"]: r["c"] for r in emb.select(
-        "id", _cell_expr(F.col("emb")).alias("c")).collect()} == \
+        "id", _cell_expr("emb").alias("c")).collect()} == \
         {0: None, 1: None, 2: None, 3: None, 4: 0, 5: 5, 6: None}
+
+    # every other site over the same vectors, against c5 reversed
+    emb = emb.withColumn("o", F.expr(_lit_sql(c5[::-1])))
+    q5 = _quantize_py(c5)[0]
+    folds = {"sq": sq_sql("emb"), "sq64": sq_sql("emb", 64),
+             "dot": dot_sql("emb", "o"), "dot64": dot_sql("emb", "o", 64)}
+    rows = {r["id"]: r for r in _int8_quant(emb, "emb", "q").select(
+        "id", "q", _bucket_expr("emb").alias("b"),
+        *[F.expr(e).alias(n) for n, e in folds.items()]).collect()}
+    assert {i: r["b"] for i, r in rows.items()} == \
+        {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 5: 240, 6: 0}
+    assert {i: r["q"] for i, r in rows.items()} == {
+        0: None, 1: [64, 127], 2: [127] * 65, 3: [127] * 63 + [None],
+        4: [0] * 64, 5: q5, 6: q5[:63] + [None]}
+    assert {i: (r["sq"], r["dot"]) for i, r in rows.items()} == {
+        0: (None, None), 1: (5.0, None), 2: (16.25, None), 3: (None, None),
+        4: (0.0, 0.0), 5: (0.9999999999999999, 0.025122901090593935),
+        6: (None, None)}
+
+    def bits(v):
+        return None if v is None else struct.pack("<d", v)
+
+    for r in rows.values():
+        assert (bits(r["sq"]), bits(r["dot"])) == \
+            (bits(r["sq64"]), bits(r["dot64"])), r
+    cos = (_cosine_to_lit("emb", c5[::-1]), F.expr(cosine_sql("emb", "o")),
+           F.expr(cosine_sql("emb", "o", dim=64)))
+    got = {r[0]: tuple(map(bits, r[1:])) for r in emb.filter("id != 4")
+           .select("id", *cos).collect()}
+    c = bits(0.025122901090593938)
+    assert got == {0: (None,) * 3, 1: (None,) * 3, 2: (None,) * 3,
+                   3: (None,) * 3, 5: (c,) * 3, 6: (None,) * 3}
+    for col in cos:
+        with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+            emb.filter("id = 4").select(col).collect()
 
     cents = [[1] * 64, [5] * 64, [1] * 64]          # 0 and 2 tie
     q = spark.createDataFrame(
